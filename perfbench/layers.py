@@ -90,6 +90,8 @@ def extra_measurements(run) -> dict[str, float]:
 
     spark, src, tr, a = run.spark, run.src, run.tr, run.args
     out: dict[str, float] = {}
+    # each build below starts cold, reusing nothing the timed loop cached
+    spark.catalog.clearCache()
     with tr.span("build.fused") as s:
         idx = B.build_index(
             src, text_col="content", natural_key=NATURAL_KEY, capacity=CAPACITY,
@@ -100,17 +102,26 @@ def extra_measurements(run) -> dict[str, float]:
     out["build.fused_s"] = s.dur
 
     # cumulative pipelines, each into a noop sink; a step's self time is its
-    # run minus the run of the pipeline before it
+    # run minus the run of the pipeline before it. prepare_docs caches its
+    # key-to-id window; the cache is emptied before each run, so every step
+    # assigns ids anew and fills it as the build does.
+    spark.catalog.clearCache()
+    cached: list = []
     n_parts = max(1, -(-a.rows // CAPACITY))
-    docs = B.prepare_docs(src, "content", None, NATURAL_KEY, CAPACITY, n_parts)
+    docs = B.prepare_docs(src, "content", None, NATURAL_KEY, CAPACITY, n_parts,
+                          tracker=cached)
     flat = B.flat_postings(docs.repartition(spark.sparkContext.defaultParallelism * 3), "content")
     packed = B.packed_from_flat(flat)
     prev = 0.0
     for step, df in (("id_assign", docs), ("tokenize", flat), ("pack", packed)):
+        for c in cached:
+            c.unpersist(blocking=True).cache()
         with tr.span(f"build.{step}") as s:
             df.write.format("noop").mode("overwrite").save()
         out[f"build.{step}_s"] = s.dur - prev
         prev = s.dur
+    for c in cached:
+        c.unpersist(blocking=True)
     out["build.postings"] = float(sum(
         c.get("n_postings", 0)
         for w in run.manifest["waves"].values()

@@ -2,7 +2,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/overhead.py --workload search --seed 1 --seconds 20
+    python3 perfbench/overhead.py --workload search --seed 1 --seconds 10
 
 Runs the benchmark once with ``--trace 0`` and once with ``--trace 1`` on the
 same seed and prints ``traced - untraced`` per metric (the traced run reports
@@ -33,7 +33,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=10)
     args = ap.parse_args()
     plain, traced = run(args, 0), run(args, 1)
     for name, m in plain.items():

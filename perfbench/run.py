@@ -2,7 +2,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload ingest --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload ingest --seed 1 --seconds 10 --trace 0
 
 Workloads (one client, closed loop, one process at ``local[<cores>]``):
 
@@ -11,7 +11,7 @@ Workloads (one client, closed loop, one process at ``local[<cores>]``):
   index answers a probe subset (the first query of each class) on both
   engines, and every answer is checked.
 * ``search`` -- one persistent build in set-up (without the forward index,
-  which queries never read), then passes in qid order over every third query
+  which queries never read), then passes in qid order over every fifth query
   of the 50-query reference set. Each query runs through ``fulltext.top_k``
   (the ``--engine dataframe`` path), then ``wand.wand_topk`` (the CLI
   default).
@@ -21,13 +21,21 @@ them and one other query runs untimed on both engines, as a warm pass would.
 A run repeats whole iterations (ingest) or passes (search) until ``--seconds``
 have gone by, at least one.
 
-Inputs are a pure function of the seeds: the synthetic code corpus
-(``corpus.row_record``, natural key ``repo,path,commit``) and the query set
-(``queryset.generate_queries`` over the corpus term statistics). Every timed
-answer is compared with the DuckDB oracle (``oracles.fulltext_topk_sql`` over
-the raw content, doc identities from ``build.prepare_docs``); an exception or
+Inputs are a pure function of ``--corpus-seed``, ``--rows`` and
+``--query-seed``, which have pinned defaults, so every ``--seed`` times the
+same work: the synthetic code corpus (``corpus.materialize_corpus``, natural
+key ``repo,path,commit``) and the query set (``queryset.generate_queries``
+over the corpus term statistics).
+Every timed answer is compared with the DuckDB oracle
+(``oracles.fulltext_topk_sql`` over the raw content, doc identities from
+``build.prepare_docs``), computed once before the timed loop; an exception or
 a mismatch counts as failed, and so does a manifest whose ``n_docs`` is not
 the row count.
+
+``setup_s`` is session start plus, on ``search``, the set-up build, load and
+warm-up; corpus generation and the oracle are not in it. Every timed build
+starts with Spark's cache empty, so none reuses a relation an earlier step
+cached.
 
 The last line of standard output is one JSON object: ``correct``,
 ``attempted``, ``failed`` and ``metrics``. ``--trace 0`` reports the
@@ -55,8 +63,10 @@ if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
 ROWS = 1000
+CORPUS_SEED = 42
+QUERY_SEED = 42
 # 1000 rows / 128 = 8 doc-partitions: twice the cores of a 4-core machine.
-# A cold persistent build of this corpus takes ~25 s and a query ~0.4-0.8 s,
+# A cold persistent build of this corpus takes ~25 s and a query ~0.5-1 s,
 # almost all of it fixed Spark cost; larger corpora do not fit the time budget.
 CAPACITY = 128
 NATURAL_KEY = ["repo", "path", "commit"]
@@ -70,10 +80,10 @@ CLASSES = [
     ("prefix", range(45, 50)),
 ]
 PROBES = [r.start for _, r in CLASSES]  # ingest: first query of each class
-# search: every third query of the reference set (17 of 50, every class
-# present). Both engines over all 50 take ~65 s a pass on 4 cores; the time
-# budget (48 runs in 3420 s, set-up included) holds about a third of that.
-SEARCH = list(range(0, 50, 3))
+# search: every fifth query of the reference set (10 of 50, every class
+# present). Both engines over all 50 take ~75 s a pass on 4 cores; the time
+# budget (48 runs in 3420 s, set-up and oracle included) holds a fifth of that.
+SEARCH = list(range(0, 50, 5))
 # untimed warm-up before timed queries: the first query in a JVM pays code
 # generation (~2.5 s against ~0.8 s warm). Not among the timed queries.
 WARM = [1]
@@ -87,7 +97,7 @@ E2E_UNITS = {
     "wand_p95_ms": "ms",
 }
 # the end-to-end metrics of the result line (BENCHMARK.json end_to_end). The
-# p95s are printed but not gated: a run times 17 queries per engine on
+# p95s are printed but not gated: a run times 10 queries per engine on
 # search and 6 on ingest, so no sample lies beyond p95 often enough to bound.
 GATED = ["setup_s", "build_docs_per_s", "index_bytes_per_content_byte",
          "query_p50_ms", "wand_p50_ms"]
@@ -105,22 +115,16 @@ def pct(xs: list[float], q: float) -> float:
 def parse_args(argv: list[str]) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True, choices=["ingest", "search"])
-    ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--seconds", type=float, default=20.0)
+    ap.add_argument("--seed", type=int, default=42,
+                    help="run label; the inputs come from the pinned seeds below")
+    ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, default=0, choices=[0, 1])
     ap.add_argument("--rows", type=int, default=ROWS)
-    ap.add_argument("--corpus-seed", type=int, default=None,
-                    help="corpus seed (default: --seed)")
-    ap.add_argument("--query-seed", type=int, default=None,
-                    help="query-set seed (default: --seed)")
+    ap.add_argument("--corpus-seed", type=int, default=CORPUS_SEED)
+    ap.add_argument("--query-seed", type=int, default=QUERY_SEED)
     ap.add_argument("--corrupt", type=int, default=0,
                     help="self-test only: corrupt this many answers before checking")
-    args = ap.parse_args(argv)
-    if args.corpus_seed is None:
-        args.corpus_seed = args.seed
-    if args.query_seed is None:
-        args.query_seed = args.seed
-    return args
+    return ap.parse_args(argv)
 
 
 def machine() -> dict:
@@ -143,62 +147,31 @@ def dir_bytes(path: str) -> int:
     )
 
 
-def write_corpus(path: str, rows: int, seed: int) -> None:
-    """The synthetic code corpus as parquet, one file per 250 rows like
-    ``corpus.materialize_corpus`` writes it, from the same per-row generator
-    (``corpus.row_record``), written in this process instead of by a Spark job."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from miru_spark.corpus import row_record
-
-    os.makedirs(path, exist_ok=True)
-    step = 250
-    for k, lo in enumerate(range(0, rows, step)):
-        recs = [row_record(i, seed) for i in range(lo, min(rows, lo + step))]
-        pq.write_table(
-            pa.Table.from_pylist(recs), os.path.join(path, f"part-{k:05d}.parquet"),
-            compression="zstd",
-        )
-
-
 class Oracle:
-    """DuckDB answers over the raw content; doc identities from prepare_docs.
+    """DuckDB over the raw content, doc identities from ``prepare_docs``: the
+    corpus term statistics and ``oracles.fulltext_topk_sql`` answers."""
 
-    ``oracles.fulltext_topk_sql`` recomputes the corpus CTEs (tokens, doc
-    lengths, tf, term stats) inside every query. They do not depend on the
-    query, so they are run once, from the oracle's own SQL text, into tables
-    of the same names; each query then runs only its own CTEs. ``spec`` is
-    any query: only the corpus CTEs of its SQL are used."""
-
-    SHARED = ("dl", "corpus", "tf", "stats")
-
-    def __init__(self, docs_pd, spec):
+    def __init__(self, docs_pd):
         import duckdb
 
         self.con = duckdb.connect()
-        self.con.execute(f"SET threads TO {len(os.sched_getaffinity(0))}")
-        self.con.register(
-            "documents",
-            docs_pd.rename(columns={"doc_key": "doc_id", "content": "text"}),
+        self.con.register("docs_pd", docs_pd)
+        self.con.execute(
+            "CREATE TABLE documents AS SELECT doc_key AS doc_id, content AS text FROM docs_pd"
         )
-        shared, _ = self._split(spec)
-        for name in self.SHARED:
-            self.con.execute(f"CREATE TABLE {name} AS {shared} SELECT * FROM {name}")
-
-    @staticmethod
-    def _split(spec) -> tuple[str, str]:
-        from miru_spark.oracles import fulltext_topk_sql
-
-        sql = fulltext_topk_sql(spec)
-        cut = sql.index("\nq AS (")
-        return sql[:cut].rstrip().rstrip(","), "WITH " + sql[cut + 1:]
 
     def term_df(self) -> list[tuple[str, int]]:
-        return self.con.execute("SELECT term, df FROM stats").fetchall()
+        from miru_spark.tokenize import duckdb_tokens_sql
+
+        return self.con.execute(
+            "SELECT term, count(DISTINCT doc_id) FROM (SELECT doc_id, "
+            f"unnest({duckdb_tokens_sql('text')}) AS term FROM documents) GROUP BY term"
+        ).fetchall()
 
     def answer(self, spec) -> list[tuple[int, float]]:
-        rows = self.con.execute(self._split(spec)[1]).fetchall()
-        return [(int(d), float(s)) for d, s in rows]
+        from miru_spark.oracles import fulltext_topk_sql
+
+        return [(int(d), float(sc)) for d, sc in self.con.execute(fulltext_topk_sql(spec)).fetchall()]
 
 
 class Run:
@@ -245,26 +218,33 @@ class Run:
 
         self.tr = Tracer(self.spark.sparkContext, bool(self.args.trace))
 
-    def setup(self):
+    def inputs(self):
+        """Corpus, query set and oracle answers; untimed, and nothing this
+        step caches in Spark outlives it."""
+        from miru_spark.corpus import materialize_corpus
         from miru_spark.filters import parse_query
         from miru_spark.operators.build import prepare_docs
         from miru_spark.queryset import generate_queries
 
         a = self.args
-        self.corpus_path = os.path.join(self.work, "corpus.parquet")
+        corpus_path = os.path.join(self.work, "corpus.parquet")
         with self.tr.span("setup.corpus"):
-            write_corpus(self.corpus_path, a.rows, a.corpus_seed)
-            self.src = self.spark.read.parquet(self.corpus_path)
+            materialize_corpus(self.spark, a.rows, corpus_path, a.corpus_seed)
+            self.src = self.spark.read.parquet(corpus_path)
         with self.tr.span("setup.oracle"):
+            cached: list = []
             n_parts = max(1, -(-a.rows // CAPACITY))
             docs_pd = (
-                prepare_docs(self.src, "content", None, NATURAL_KEY, CAPACITY, n_parts)
+                prepare_docs(self.src, "content", None, NATURAL_KEY, CAPACITY, n_parts,
+                             tracker=cached)
                 .select("doc_key", "content")
                 .toPandas()
             )
+            for df in cached:
+                df.unpersist(blocking=True)
             self.content_bytes = int(docs_pd["content"].str.encode("utf-8").str.len().sum())
-            self.oracle = Oracle(docs_pd, parse_query("x"))
-            qset = generate_queries(self.oracle.term_df(), seed=a.query_seed, k=K)
+            oracle = Oracle(docs_pd)
+            qset = generate_queries(oracle.term_df(), seed=a.query_seed, k=K)
             self.queries_spec = [
                 (q["qid"], q["query"], q["scorer"],
                  parse_query(q["query"], k=q["k"], scorer=q["scorer"]))
@@ -272,11 +252,13 @@ class Run:
             ]
             picked = PROBES if a.workload == "ingest" else SEARCH
             self.timed = [self.queries_spec[i] for i in picked]
-            self.expected = {q[0]: self.oracle.answer(q[3]) for q in self.timed}
-        if a.workload == "search":
-            # queries never read the forward index, so set-up skips it
-            self.idx = self.build(os.path.join(self.work, "index"), forward_index=False)
-            self.warm(self.idx)
+            self.expected = {q[0]: oracle.answer(q[3]) for q in self.timed}
+
+    def setup_search(self):
+        """The search workload's index: built (without the forward index,
+        which queries never read), loaded and warmed."""
+        self.idx = self.build(os.path.join(self.work, "index"), forward_index=False)
+        self.warm(self.idx)
 
     # ------------------------------------------------------------ operations
     def check(self, got: list[tuple[int, float]], want: list[tuple[int, float]]) -> bool:
@@ -296,6 +278,9 @@ class Run:
 
         a = self.args
         shutil.rmtree(index_dir, ignore_errors=True)
+        # a cold build: no relation cached by the oracle or an earlier build
+        # (build_persistent caches its docs and never frees them)
+        self.spark.catalog.clearCache()
         t0 = time.perf_counter()
         try:
             with self.tr.span("index_store.build") as sp:
@@ -471,8 +456,14 @@ def main(argv: list[str]) -> int:
     try:
         t0 = time.perf_counter()
         run.start_session()
-        run.setup()
         setup_s = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        run.inputs()
+        inputs_s = time.perf_counter() - t0
+        if args.workload == "search":
+            t0 = time.perf_counter()
+            run.setup_search()
+            setup_s += time.perf_counter() - t0
         run.measure()
         metrics = run.e2e()
         metrics["setup_s"] = setup_s
@@ -498,7 +489,7 @@ def main(argv: list[str]) -> int:
     print(f"# workload={args.workload} seed={args.seed} rows={args.rows} "
           f"capacity={CAPACITY} master=local[{run.mach['cpus']}] "
           f"heap={run.mach['heap']} iterations={run.iterations} "
-          f"timed_queries_per_engine={n_q}")
+          f"timed_queries_per_engine={n_q} untimed_inputs_s={inputs_s:.1f}")
     print(f"# error_rate={run.failed / max(1, run.attempted):.6f} ratio "
           f"(failed {run.failed} of {run.attempted} operations)")
     for name, (value, unit) in shown.items():

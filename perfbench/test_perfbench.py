@@ -37,34 +37,6 @@ def result(proc: subprocess.CompletedProcess) -> dict:
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
-def test_corpus_is_a_pure_function_of_the_seed(tmp_path):
-    import pyarrow.parquet as pq
-
-    for name, seed in (("a", 1), ("b", 1), ("c", 2)):
-        run.write_corpus(str(tmp_path / name), 300, seed)
-    a, b, c = (pq.read_table(str(tmp_path / n)) for n in "abc")
-    assert a.num_rows == 300 and a.equals(b) and not a.equals(c)
-
-
-def test_shared_table_oracle_matches_the_full_oracle_sql():
-    import duckdb
-
-    from miru_spark.corpus import corpus_pandas
-    from miru_spark.filters import parse_query
-    from miru_spark.oracles import fulltext_topk_sql
-    from miru_spark.queryset import generate_queries
-
-    docs = corpus_pandas(60, seed=3)[["content"]]
-    docs.insert(0, "doc_key", range(1000, 1060))
-    oracle = run.Oracle(docs, parse_query("x"))
-    full = duckdb.connect()
-    full.register("documents", docs.rename(columns={"doc_key": "doc_id", "content": "text"}))
-    for q in generate_queries(oracle.term_df(), seed=3, k=20):
-        spec = parse_query(q["query"], k=q["k"], scorer=q["scorer"])
-        want = [(int(d), float(s)) for d, s in full.execute(fulltext_topk_sql(spec)).fetchall()]
-        assert oracle.answer(spec) == want, q
-
-
 def test_tiny_run_prints_every_end_to_end_metric_with_its_unit():
     proc = bench("--workload", "ingest", "--seed", "5", "--trace", "0")
     res = result(proc)
