@@ -87,7 +87,7 @@ def cmd_upsert(args) -> None:
 def cmd_query(args) -> None:
     from miru_spark.filters import Leaf, parse_query
     from miru_spark.index_store import load_index
-    from miru_spark.operators import fulltext, wand
+    from miru_spark.operators import fulltext
 
     spark = _spark("miru_query")
     idx = load_index(spark, args.index)
@@ -106,11 +106,7 @@ def cmd_query(args) -> None:
         # MiruRequest carries the caller's authz expression; empty = sees
         # nothing (NOT_PROVIDED). Labels resolve against the 'authz' aux field.
         spec.authz = [v for v in args.authz.split(",") if v != ""]
-    if args.engine == "wand":
-        # wand_topk delegates tree/constraint specs to the DataFrame path
-        res = wand.wand_topk(idx, spec)
-    else:
-        res = fulltext.top_k(idx, spec)
+    res = fulltext.top_k(idx, spec)
     rows = [{"doc": r["doc"], "score": r["score"]} for r in res.collect()]
     print(json.dumps({"query": args.q, "scorer": args.scorer, "k": args.k, "results": rows}))
 
@@ -214,7 +210,6 @@ def build_parser() -> argparse.ArgumentParser:
     q.add_argument("--q", required=True)
     q.add_argument("--k", type=int, default=100)
     q.add_argument("--scorer", default="bm25", choices=["bm25", "miru_tfidf", "time"])
-    q.add_argument("--engine", default="wand", choices=["wand", "dataframe"])
     q.add_argument("--time-range", default=None, help="lo,hi inclusive doc_key range")
     q.add_argument(
         "--constraint", action="append", default=None, help="field:value mask (repeatable)"

@@ -28,9 +28,11 @@ collected with their query frequency qtf like MiruAggregateUtil.collectTerm
 (:876-892).
 
 Flat queries (one level of AND or OR over default-field terms, optional
-negatives) flatten into QuerySpec.positive/negative/op and take the proven
-flat execution path (incl. the WAND kernels); anything nested carries
-``tree`` and takes the recursive set-algebra path.
+negatives) flatten into QuerySpec.positive/negative/op; anything nested
+carries ``tree``. A flat spec with no mask beyond timeRange and a scored
+strategy (``flat_scored``) runs on the per-partition packed-postings kernel
+(operators/wand.py). Every other spec takes the tree paths, a flat one
+after ``flat_tree`` lifts it into the equivalent filter tree.
 """
 
 from __future__ import annotations
@@ -289,6 +291,33 @@ def _flatten(tree: Node | Leaf) -> tuple[list[Clause], list[Clause], str] | None
         [Clause(lf.term, lf.prefix) for lf in neg_leaves],
         op,
     )
+
+
+def flat_scored(spec: QuerySpec) -> bool:
+    """True when the packed-postings kernel answers ``spec`` on its own: a
+    flat query, scored, whose only mask is a timeRange. Constraints and
+    authz must AND in before the kernel's heap, and TIME is an ordered
+    LIMIT, so those specs take the tree paths."""
+    return (
+        spec.tree is None
+        and not spec.constraints
+        and spec.authz is None
+        and spec.scorer != "time"
+    )
+
+
+def flat_tree(spec: QuerySpec) -> Node:
+    """The filter tree equivalent to a flat spec: its positive clauses under
+    ``spec.op``, each repeated qtf times so collect_scoring_leaves recovers
+    the qtf, wrapped in pButNotQ when there are negatives. The spec must
+    have a positive clause (a tree cannot express an empty one)."""
+    tree = Node(
+        spec.op,
+        tuple(Leaf(c.term, "", c.prefix) for c in spec.positive for _ in range(c.qtf)),
+    )
+    if not spec.negative:
+        return tree
+    return Node("pButNotQ", (tree, *(Leaf(c.term, "", c.prefix) for c in spec.negative)))
 
 
 def parse_query(

@@ -12,21 +12,27 @@ miru-stream-plugins/.../fulltext/FullTextAnswer.java:80-89):
 * ``time`` — the TIME strategy: newest k docs, score 0.0
   (FullText.collectTime, FullText.java:222-251).
 
-Determinism: per-doc scores are summed in ascending term order via
-``aggregate(array_sort(collect_list(struct(term, contrib))))`` so float
-results are bit-stable across partition counts and match the DuckDB oracle's
-``list_aggregate(list(c ORDER BY term), 'sum')`` op-for-op. Emitted scores
-are rounded to 6 decimals and the rounded value is the sort key.
+Determinism: a doc's score is the sum of its query terms' contributions
+in ascending (term, contrib) order, the DuckDB oracle's
+``list_aggregate(list(c ORDER BY term), 'sum')`` op-for-op, so float results
+are bit-stable across partition counts. Flat queries (``filters.flat_scored``)
+are scored by the per-partition packed-postings kernel (operators/wand.py),
+which sums in numpy and rounds half away from zero like the oracle's
+``round``. Tree queries fold in Catalyst with one
+``aggregate(array_sort(collect_list(struct(term, contrib))))`` expression
+(``_ordered_score``). Emitted scores are rounded to 6 decimals and the
+rounded value is the sort key.
 
 Plan shape at scale: the only big-table touch is the postings scan with the
 query terms pushed down (`term IN (...)` reaches the parquet reader); the
-query-term table and per-term stats are broadcast; the winners→docs gather
-join happens after LIMIT (lazy materialization, FullText.java:204-217).
+tree paths broadcast the query-term table with its per-term stats; the
+winners→docs gather join happens after LIMIT (lazy materialization,
+FullText.java:204-217).
 """
 
 from __future__ import annotations
 
-import os
+import dataclasses
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +43,8 @@ from miru_spark.filters import (
     Node,
     QuerySpec,
     collect_scoring_leaves,
+    flat_scored,
+    flat_tree,
     parse_query,
 )
 from miru_spark.operators.build import IndexHandle
@@ -111,9 +119,7 @@ def postings_for_terms(
 # huge terms keep the full width. df is a property of the DATA, not the
 # session, so N-core and 4N-core runs still build identical plans (the
 # scaling-bench invariant).
-_DECODE_POSTINGS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_DECODE_POSTINGS_PER_TASK", "262144")
-)
+_DECODE_POSTINGS_PER_TASK = 262_144
 
 
 def _decode_width(index: IndexHandle, terms: list[str]) -> int | None:
@@ -223,28 +229,20 @@ def expand_negatives(index: IndexHandle, spec: QuerySpec) -> list[str]:
 
 
 def _query_relation(index: IndexHandle, expanded: list[tuple[str, int, int]]):
-    """ONE broadcast relation (term, qtf, clause, df, cum_tf) for the scoring
-    join: the ≤max_expansion per-term stats rows come from the per-handle
-    term_stats memo (one term-pruned stats job on cold terms, none warm) and
-    fold into the query-term table, so the hot path pays a single broadcast
-    join instead of two. Unknown terms drop out here — they have no
-    postings, so the result is identical (an unknown AND-clause still
-    yields the empty set because its clause id can never reach the matched
-    count).
+    """ONE broadcast relation (term, qtf, df, cum_tf) for the tree paths'
+    scoring join, one row per (term, clause) pair, so a term that several
+    clauses share contributes once per clause: the ≤max_expansion per-term
+    stats rows come from the per-handle term_stats memo (one term-pruned
+    stats job on cold terms, none warm) and fold into the query-term table,
+    so the hot path pays a single broadcast join instead of two. Unknown
+    terms drop out here — they have no postings, so the result is identical.
 
     Returns (q_relation, known_terms)."""
     spark = index.stats.sparkSession
-    terms = sorted({t for t, _, _ in expanded})
-    srows = term_stats(index, terms)
-    rows = [
-        (t, qtf, cid, srows[t][0], srows[t][1])
-        for t, qtf, cid in expanded
-        if t in srows
-    ]
-    q = spark.createDataFrame(
-        rows, "term string, qtf int, clause int, df long, cum_tf long"
-    )
-    return q, sorted({t for t, _, _, _, _ in rows})
+    srows = term_stats(index, sorted({t for t, _, _ in expanded}))
+    rows = [(t, qtf, *srows[t]) for t, qtf, _ in expanded if t in srows]
+    q = spark.createDataFrame(rows, "term string, qtf int, df long, cum_tf long")
+    return q, sorted({r[0] for r in rows})
 
 
 def _contrib_col(scorer: str, n_docs: int, avgdl: float) -> F.Column:
@@ -263,62 +261,6 @@ def _contrib_col(scorer: str, n_docs: int, avgdl: float) -> F.Column:
         # exact reference op order: (qtf * tf) / cum_tf  (FullText.java:118-127)
         return (qtf * tf) / F.col("cum_tf")
     raise ValueError(f"unknown scorer {scorer}")
-
-
-def score_candidates(index: IndexHandle, spec: QuerySpec) -> DataFrame:
-    """(part, doc_id, doc_key, score, matched) for every doc matching ≥1
-    positive clause, minus docs matching any negative term (pButNotQ)."""
-    spark = index.stats.sparkSession  # docs may be absent on a loaded index
-    expanded = expand_clauses(index, spec)
-    if not expanded:
-        return spark.createDataFrame(
-            [], "part int, doc_id int, doc_key long, score double, matched long"
-        )
-    q, terms = _query_relation(index, expanded)
-    if not terms:
-        return spark.createDataFrame(
-            [], "part int, doc_id int, doc_key long, score double, matched long"
-        )
-
-    # the posting rows are SELF-CONTAINED for scoring (tf + dl + doc_key
-    # packed per posting — build.PACKED_SCHEMA): no join against the
-    # O(corpus) doclens relation; the only big-table touch stays the
-    # term-pruned (and, under a timeRange, part-pruned) postings scan
-    pparts = parts_for_time_range(index, spec.time_range)
-    cand = postings_for_terms(index, terms, pparts).join(F.broadcast(q), "term")
-    contrib = cand.withColumn(
-        "contrib", _contrib_col(spec.scorer, index.corpus.n_docs, index.corpus.avgdl)
-    )
-    # single-task-sized queries (Σdf under one task's postings budget, the
-    # common point-query case) pre-partition BY THE GROUPING KEYS into ONE
-    # partition: the groupBy reuses this exchange (same keys ⇒ distribution
-    # satisfied), collapsing scan→agg→top-k into a 1-exchange plan with no
-    # AQE coalesce round-trip — measured −18% warm latency on a single-term
-    # query. Larger queries keep the default shuffle: their partial
-    # aggregation compresses multi-term docs BEFORE the exchange, which the
-    # keyed repartition would forfeit (measured +20% on a 100-term prefix).
-    # Σdf comes from the warm stats memo — a data property, so plans stay
-    # identical across session widths.
-    srows = term_stats(index, terms)  # memo hit — no job
-    if sum(df for df, _ in srows.values()) <= _DECODE_POSTINGS_PER_TASK:
-        contrib = contrib.repartition(1, "part", "doc_id", "doc_key")
-    scored = contrib.groupBy("part", "doc_id", "doc_key").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score"),
-        F.count_distinct("clause").alias("matched"),
-    )
-    if spec.op == "and":
-        scored = scored.filter(F.col("matched") == len(spec.positive))
-    neg_terms = expand_negatives(index, spec)
-    if neg_terms:
-        # pruning the NEGATIVE scan by the same part set is safe: an
-        # in-range candidate's negative posting lives in the same part
-        neg_docs = postings_for_terms(index, neg_terms, pparts).select("part", "doc_id")
-        scored = scored.join(neg_docs, ["part", "doc_id"], "left_anti")
-    return scored
 
 
 def leaf_doc_set(index: IndexHandle, leaf: Leaf, max_expansion: int = 100) -> DataFrame:
@@ -504,6 +446,29 @@ def _satisfiable_with_no_hits(node: Node | Leaf | None) -> bool:
     return vals[0]
 
 
+def _ordered_score() -> F.Column:
+    """A group's score: its non-null ``contrib``s summed from 0.0 in
+    ascending (term, contrib) order — the oracle's ordered sum."""
+    return F.aggregate(
+        F.array_sort(
+            F.collect_list(F.when(F.col("contrib").isNotNull(), F.struct("term", "contrib")))
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x["contrib"],
+    ).alias("score")
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """(doc, score) top-k of a (doc_key, score) relation: the score rounded
+    to 6 decimals is the sort key, ties broken by doc_key desc."""
+    return (
+        scored.withColumn("score_r", F.round("score", 6))
+        .orderBy(F.desc("score_r"), F.desc("doc_key"))
+        .limit(k)
+        .select(F.col("doc_key").alias("doc"), F.col("score_r").alias("score"))
+    )
+
+
 def top_k_tree(index: IndexHandle, spec: QuerySpec) -> DataFrame:
     """Top-k for a nested filter tree: candidates + scores in ONE pass.
 
@@ -538,24 +503,13 @@ def top_k_tree(index: IndexHandle, spec: QuerySpec) -> DataFrame:
                 _contrib_col(spec.scorer, index.corpus.n_docs, index.corpus.avgdl),
             )
         )
-        scored = contrib.groupBy("part", "doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score")
-        )
+        scored = contrib.groupBy("part", "doc_id").agg(_ordered_score())
         res = cand.join(scored, ["part", "doc_id"], "left").withColumn(
             "score", F.coalesce(F.col("score"), F.lit(0.0))
         )
     else:
         res = cand.withColumn("score", F.lit(0.0))
-    return (
-        res.withColumn("score_r", F.round("score", 6))
-        .orderBy(F.desc("score_r"), F.desc("doc_key"))
-        .limit(spec.k)
-        .select(F.col("doc_key").alias("doc"), F.col("score_r").alias("score"))
-    )
+    return _ranked(res, spec.k)
 
 
 def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
@@ -642,8 +596,7 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
 
     # scoring contribs ride the SAME rows: left-join the broadcast query-term
     # + stats tables; non-scoring rows (aux, tree-only terms) get NULL
-    # contribs, which collect_list skips — the fold is byte-identical to the
-    # flat path's ascending-term ordered sum
+    # contribs, which the ordered fold skips
     expanded = _expanded_scoring_terms(index, spec)
     if expanded:
         q, terms_scoring = _query_relation(index, expanded)
@@ -655,27 +608,21 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
                 _contrib_col(spec.scorer, index.corpus.n_docs, index.corpus.avgdl),
             )
         )
-        score_agg = F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("contrib").isNotNull(), F.struct("term", "contrib")
-                    )
-                )
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
+        score_agg = _ordered_score()
     else:
         score_agg = F.lit(0.0).alias("score")
     flag_cols = [
         F.max(F.when(preds[i], F.lit(True))).alias(f"_l{i}") for i in range(len(leaves))
     ]
     if content_terms and not aux_preds:
-        # same single-task-sized exchange rule as score_candidates: the scan
-        # is term-pruned, so its row count is Σdf of the content leaves
-        # (known from the warm stats memo); aux-backed trees keep the
-        # default width because the aux branch's cardinality is not memoized
+        # single-task-sized queries (Σdf under one task's postings budget)
+        # pre-partition BY THE GROUPING KEYS into ONE partition: the groupBy
+        # reuses this exchange, a 1-exchange plan with no AQE coalesce
+        # round-trip. The scan is term-pruned, so its row count is Σdf of the
+        # content leaves (known from the warm stats memo, a data property:
+        # plans stay identical across session widths); aux-backed trees keep
+        # the default width because the aux branch's cardinality is not
+        # memoized
         srows_all = term_stats(index, sorted(content_terms))
         if sum(df for df, _ in srows_all.values()) <= _DECODE_POSTINGS_PER_TASK:
             cand = cand.repartition(1, "part", "doc_id", "doc_key")
@@ -692,58 +639,44 @@ def _top_k_tree_single_scan(index: IndexHandle, spec: QuerySpec) -> DataFrame:
         for j in range(n_tree + n_constraints + 1, len(leaves)):
             acond = acond | flag(j)
         cond = cond & acond
-    return (
-        _not_removed(index, grouped.filter(cond))
-        .withColumn("score_r", F.round("score", 6))
-        .orderBy(F.desc("score_r"), F.desc("doc_key"))
-        .limit(spec.k)
-        .select(F.col("doc_key").alias("doc"), F.col("score_r").alias("score"))
+    return _ranked(_not_removed(index, grouped.filter(cond)), spec.k)
+
+
+def as_spec(index: IndexHandle, query: str | QuerySpec, k: int, scorer: str) -> QuerySpec:
+    """``query`` as a QuerySpec; a string parses with the index's analyzer
+    (its stopword and stemmer dialect)."""
+    if isinstance(query, QuerySpec):
+        return query
+    return parse_query(
+        query, k=k, scorer=scorer, stopwords=index.stopwords, stemmer=index.stemmer
     )
 
 
 def top_k(index: IndexHandle, query: str | QuerySpec, k: int = 100, scorer: str = "bm25") -> DataFrame:
     """Global top-k (doc_key, score) — ordered LIMIT = the reference's
-    cross-partition merge (FullTextAnswerMerger.java:31-68)."""
-    spec = (
-        query
-        if isinstance(query, QuerySpec)
-        else parse_query(
-            query, k=k, scorer=scorer, stopwords=index.stopwords,
-            stemmer=index.stemmer,
-        )
-    )
+    cross-partition merge (FullTextAnswerMerger.java:31-68).
+
+    Flat scored specs run on the per-partition packed-postings kernel
+    (wand.wand_topk). Every other spec takes the tree paths; a flat one is
+    lifted into its filter tree first."""
+    spec = as_spec(index, query, k, scorer)
+    if flat_scored(spec):
+        from miru_spark.operators.wand import wand_topk
+
+        return wand_topk(index, spec)
+    if spec.tree is None:
+        if not spec.positive:
+            return index.stats.sparkSession.createDataFrame([], "doc long, score double")
+        spec = dataclasses.replace(spec, tree=flat_tree(spec))
     if spec.scorer == "time":
         # TIME strategy: descending insertion order over the ANSWER set
         # (FullText.collectTime iterates the filtered bitmap, :222-251),
         # score 0.0.
-        if spec.tree is not None:
-            cand = eval_filter(index, spec.tree, spec.max_expansion).join(
-                index.lens, ["part", "doc_id"]
-            )
-        else:
-            # reuse the flat filter evaluation (AND/OR matched-clause count +
-            # pButNotQ anti-join) with a throwaway scorer — scores are
-            # discarded, TIME emits 0.0
-            import dataclasses
-
-            cand = score_candidates(
-                index, dataclasses.replace(spec, scorer="bm25")
-            ).select("part", "doc_id", "doc_key")
-        matched = _apply_masks(index, cand, spec)
-        return (
-            matched.orderBy(F.desc("doc_key"))
-            .limit(spec.k)
-            .select(F.col("doc_key").alias("doc"), F.lit(0.0).alias("score"))
+        cand = eval_filter(index, spec.tree, spec.max_expansion).join(
+            index.lens, ["part", "doc_id"]
         )
-    if spec.tree is not None:
-        return top_k_tree(index, spec)
-    scored = _apply_masks(index, score_candidates(index, spec), spec)
-    return (
-        scored.withColumn("score_r", F.round("score", 6))
-        .orderBy(F.desc("score_r"), F.desc("doc_key"))
-        .limit(spec.k)
-        .select(F.col("doc_key").alias("doc"), F.col("score_r").alias("score"))
-    )
+        return _ranked(_apply_masks(index, cand, spec).withColumn("score", F.lit(0.0)), spec.k)
+    return top_k_tree(index, spec)
 
 
 def gather(index: IndexHandle, winners: DataFrame, gather_cols: list[str]) -> DataFrame:

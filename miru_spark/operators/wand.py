@@ -10,6 +10,10 @@ FullTextAnswerMerger.java:31-68). The WAND threshold θ plays the role of the
 cross-partition report's ``lowestScore`` admission bound (FullText.java:129-158),
 maintained per partition here because Spark partitions execute concurrently.
 
+This is the one scoring path for flat queries: ``fulltext.top_k`` routes
+every ``filters.flat_scored`` spec here, and ``wand_topk`` hands every other
+spec back to ``fulltext.top_k``'s tree paths.
+
 Three kernels, all returning EXACTLY the same (doc, score) set:
   * ``and``  — rarest-first sorted-array intersection, then vectorized BM25
                over survivors only (the bitmap-AND fast path).
@@ -19,7 +23,11 @@ Three kernels, all returning EXACTLY the same (doc, score) set:
                upper bounds, block skipping via searchsorted over block_last /
                block_max_tf. Python pivot loop + numpy block decode; heap
                survivors are rescored with the ascending-term-order float sum
-               so scores are bit-identical to the DataFrame path.
+               so scores are bit-identical to the oracle's ordered sum.
+
+A term that several positive clauses share (``spark AND spa*``) contributes
+once per clause, like the oracle's query-term join. Emitted scores round to
+6 decimals half away from zero (``_round6``), as the oracle's ``round`` does.
 
 Scale note: per-partition state is O(capacity) (the dense dl/accumulator
 arrays) — bounded by the partition rollover capacity exactly like the
@@ -29,7 +37,6 @@ reference's per-partition bitmaps, independent of corpus size.
 from __future__ import annotations
 
 import heapq
-import os
 
 import numpy as np
 import pandas as pd
@@ -37,11 +44,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from miru_spark import codec
-from miru_spark.filters import QuerySpec, parse_query
+from miru_spark.filters import QuerySpec, flat_scored
+from miru_spark.operators import fulltext as _ft
 from miru_spark.operators.build import IndexHandle
 from miru_spark.operators.fulltext import (
     K1,
     B,
+    as_spec,
     expand_clauses,
     expand_negatives,
     parts_for_time_range,
@@ -50,7 +59,7 @@ from miru_spark.operators.fulltext import (
 
 # kernel='auto' switches TAAT → WAND above this many decoded postings per
 # partition (see the measured rationale at the auto branch in wand_topk)
-_TAAT_CUTOFF = int(os.environ.get("SPARK_GRAFT_TAAT_CUTOFF", "8000000"))
+_TAAT_CUTOFF = 8_000_000
 # the cross-partition θ-seed pre-pass (an extra small job) only pays once a
 # query's total posting volume is large — below this it's pure overhead.
 # Measured (BENCH/theta_seed_sf1.0.json, interleaved A/B, identity-checked):
@@ -61,12 +70,20 @@ _TAAT_CUTOFF = int(os.environ.get("SPARK_GRAFT_TAAT_CUTOFF", "8000000"))
 # reference's SEQUENTIAL partition walk where the carry is free). Default
 # therefore aligns with the TAAT→WAND switch: only queries big enough to
 # run the python block-max kernel may pay the seed job.
-_SEED_MIN_POSTINGS = int(
-    os.environ.get("SPARK_GRAFT_WAND_SEED_MIN", str(8_000_000))
-)
+_SEED_MIN_POSTINGS = 8_000_000
 # θ₀ the last wand_topk call seeded with (−inf = pre-pass skipped);
 # driver-side, for tests and the BENCH profiling script only
 _LAST_THETA0 = -np.inf
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """Round to 6 decimals, halves away from zero: DuckDB's
+    ``round(x, 6)`` = std::round(x * 1e6) / 1e6. np.round rounds halves to
+    even and would disagree with the oracle on exact half-way products."""
+    y = np.asarray(x, dtype=np.float64) * 1e6
+    t = np.trunc(y)
+    r = np.where(np.abs(y - t) == 0.5, t + np.sign(y), np.rint(y))
+    return r / 1e6
 
 
 def _bm25_contrib(tf: np.ndarray, dl: np.ndarray, df: float, n_docs: int, avgdl: float,
@@ -108,7 +125,9 @@ def _decode_terms(
     time_range: tuple[int, int] | None = None,
 ) -> list[_TermCtx]:
     """Decode the query terms' postings (ids, tfs + the per-posting dl/key
-    attributes — the postings are self-contained, no doclens lookup); docs in
+    attributes — the postings are self-contained, no doclens lookup) into one
+    context per (term, clause) pair of ``qinfo`` (term → [(qtf, clause)]),
+    the pair contexts sharing the decoded arrays; docs in
     ``neg_ids`` are removed from every positive list BEFORE any kernel runs
     (pButNotQ), and ``time_range`` masks by the decoded doc_key the same way
     (time IS insertion order — Miru's timeRange). This is the only correct
@@ -120,15 +139,14 @@ def _decode_terms(
     for row in pdf.itertuples(index=False):
         if row.term not in qinfo:
             continue
-        qtf, clause = qinfo[row.term]
         st = stats.get(row.term)
         if st is None:
             # a term can have packed rows but no stats row — version repair's
             # stats correction keeps df>0 terms only, while its tombstoned
             # posting rows survive in postings/ until the next merge. The
-            # DataFrame path drops such terms at the stats join; do the same
-            # here instead of KeyError-ing the whole query. (AND semantics
-            # stay correct: the term's clause goes missing and _kernel_and
+            # oracle's stats join drops such terms; do the same here
+            # instead of KeyError-ing the whole query. (AND semantics stay
+            # correct: the term's clause goes missing and _kernel_and
             # returns empty, matching matched==len(positive).)
             continue
         df_g, cum_g = st
@@ -145,19 +163,23 @@ def _decode_terms(
             ids, tfs, dls, keys = ids[keep], tfs[keep], dls[keep], keys[keep]
         if not len(ids):
             continue
-        out.append(
+        block_last = np.asarray(row.block_last, dtype=np.int64)
+        block_max_tf = np.asarray(row.block_max_tf, dtype=np.int64)
+        out.extend(
             _TermCtx(row.term, qtf, clause, df_g, cum_g, ids, tfs, dls, keys,
-                     np.asarray(row.block_last, dtype=np.int64),
-                     np.asarray(row.block_max_tf, dtype=np.int64))
+                     block_last, block_max_tf)
+            for qtf, clause in qinfo[row.term]
         )
-    out.sort(key=lambda t: t.term)  # ascending-term order = deterministic sums
+    # ascending (term, contrib) order = the oracle's deterministic sum; a
+    # term's contribution grows with its qtf, so (term, qtf) orders the same
+    out.sort(key=lambda t: (t.term, t.qtf))
     return out
 
 
 def _exact_scores(terms: list[_TermCtx], doc_ids: np.ndarray,
                   scorer: str, n_docs: int, avgdl: float) -> np.ndarray:
     """Ascending-term-order exact rescore of a candidate id set — float ops
-    identical to the DataFrame path's ordered fold. dl comes from the hit
+    identical to the oracle's ordered sum. dl comes from the hit
     term's own posting row (the same doc carries the same dl in every list)."""
     scores = np.zeros(len(doc_ids), dtype=np.float64)
     for t in terms:  # already term-ascending
@@ -177,7 +199,9 @@ def _exact_scores(terms: list[_TermCtx], doc_ids: np.ndarray,
 
 
 def _kernel_and(terms, required_clauses, scorer, n_docs, avgdl, k):
-    """Intersect clause id-sets (rarest first), vectorized rescore."""
+    """Intersect clause id-sets (rarest first), vectorized rescore. A term
+    shared by several clauses has one context per clause, so it counts
+    toward each of them."""
     by_clause: dict[int, np.ndarray] = {}
     for t in terms:
         cur = by_clause.get(t.clause)
@@ -371,36 +395,25 @@ def _kernel_wand(terms, scorer, n_docs, avgdl, k, theta0=-np.inf):
 def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
               scorer: str = "bm25", kernel: str = "auto") -> DataFrame:
     """Top-k via the per-partition packed-postings kernel + global ordered
-    LIMIT. Result is rank- and score-identical to fulltext.top_k."""
-    spec = (
-        query
-        if isinstance(query, QuerySpec)
-        else parse_query(
-            query, k=k, scorer=scorer, stopwords=index.stopwords,
-            stemmer=index.stemmer,
-        )
-    )
-    if (
-        spec.scorer == "time"
-        or spec.tree is not None
-        or spec.constraints
-        or spec.authz is not None
-    ):
+    LIMIT. ``fulltext.top_k`` builds the same plan for every spec."""
+    spec = as_spec(index, query, k, scorer)
+    if not flat_scored(spec):
         # TIME is an ordered LIMIT, not a scored kernel; nested trees,
-        # constraint masks, and the authz mask need the relational
-        # set-algebra path (the reference ANDs constraint + authz bitmaps
-        # before scoring — doing it after the heap would readmit pruned
-        # docs, and skipping authz here would be an authorization bypass:
-        # only fulltext._apply_masks applies spec.authz). Delegate; results
-        # are identical by construction.
-        from miru_spark.operators import fulltext as _ft
-
+        # constraint masks, and the authz mask need the tree paths (the
+        # reference ANDs constraint + authz bitmaps before scoring — doing
+        # it after the heap would readmit pruned docs, and skipping authz
+        # here would be an authorization bypass). Delegate.
         return _ft.top_k(index, spec)
     spark = index.packed.sparkSession
     expanded = expand_clauses(index, spec)
     if not expanded:
         return spark.createDataFrame([], "doc long, score double")
-    qinfo = {t: (q, c) for t, q, c in expanded}
+    # term → [(qtf, clause)]: one contribution per (term, clause) pair, as
+    # the oracle's query-term join makes — a dict keyed by term alone would
+    # drop all but one clause of a term that several clauses share
+    qinfo: dict[str, list[tuple[int, int]]] = {}
+    for t, q, c in expanded:
+        qinfo.setdefault(t, []).append((q, c))
     terms = sorted(qinfo)
     neg_terms = expand_negatives(index, spec)
     stats = {
@@ -411,8 +424,8 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
     required = sorted({c for _, _, c in expanded})
     if spec.op == "and" and len(required) < len(spec.positive):
         # a positive clause (e.g. a prefix matching no indexed term) expanded
-        # to zero terms: the conjunction is unsatisfiable. score_candidates
-        # gets this via its matched == len(positive) filter; return the same
+        # to zero terms: the conjunction is unsatisfiable. The oracle gets
+        # this via its matched == len(positive) filter; return the same
         # empty result instead of silently dropping the clause from
         # `required` and scoring the remaining terms.
         return spark.createDataFrame([], "doc long, score double")
@@ -479,7 +492,8 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
             return pd.DataFrame({"doc": pd.Series([], dtype="int64"),
                                  "score": pd.Series([], dtype="float64")})
         # per-partition partial top-k (the reference's per-partition heap)
-        order = np.lexsort((-docs, -np.round(scores, 6)))[:kk]
+        rounded = _round6(scores)
+        order = np.lexsort((-docs, -rounded))[:kk]
         winners = docs[order]
         # winner doc_id → doc_key by binary search over each term's (already
         # sorted) decoded list — O(terms · k · log P). Every winner came out
@@ -499,8 +513,7 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
             if hit.any():
                 keys_out[hit] = t.keys[pos_c[hit]]
                 found[hit] = True
-        return pd.DataFrame({"doc": keys_out,
-                             "score": np.round(scores[order], 6)})
+        return pd.DataFrame({"doc": keys_out, "score": rounded[order]})
 
     posts = index.packed.filter(F.col("term").isin(terms + neg_terms)).select(
         "part", "term", "df_part", "ids", "tfs", "dls", "keys",
@@ -515,14 +528,12 @@ def wand_topk(index: IndexHandle, query: str | QuerySpec, k: int = 100,
                                   "doc_id": pd.Series([], dtype="int32")})
 
     # single-task-sized queries (Σdf under one task's postings budget — the
-    # same df-derived rule as fulltext.score_candidates) pre-partition BY
+    # same df-derived rule as the tree path's single scan) pre-partition BY
     # PART into one partition: the grouped map reuses that exchange, so the
     # kernel job is scan → ONE exchange → python kernel instead of a
     # session-width shuffle fanning ~50 part-groups over 32 reducers. Σdf
     # is a data property, so N- and 4N-core sessions plan identically.
-    from miru_spark.operators.fulltext import _DECODE_POSTINGS_PER_TASK
-
-    small_q = sum(df for df, _ in stats.values()) <= _DECODE_POSTINGS_PER_TASK
+    small_q = sum(df for df, _ in stats.values()) <= _ft._DECODE_POSTINGS_PER_TASK
 
     def _job(rel, theta0: float) -> DataFrame:
         # the removal mask is the ONLY non-posting relation the kernel needs

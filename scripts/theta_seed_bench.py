@@ -6,7 +6,7 @@ on via cutoff 0; unseeded leg = cutoff above any query), best-of per leg,
 result identity asserted row-for-row every round:
 
 * the sf1.0 documents fixture (50k docs) — posting volume far BELOW the
-  production cutoff (SPARK_GRAFT_WAND_SEED_MIN = 1M): quantifies the
+  production cutoff (wand._SEED_MIN_POSTINGS = 8M): quantifies the
   pre-pass overhead the cutoff exists to avoid.
 * the 500k-row synthetic code corpus with a hot-term OR (the skew fixture's
   injected terms appear in a large fraction of rows) — posting volume ABOVE
@@ -124,7 +124,7 @@ def main() -> None:
     big["hot_or_wand"]["terms"] = hot
     big["hot_or_wand"]["total_df"] = int(total_df)
     big["hot_or_wand"]["fires_at_default_cutoff"] = bool(
-        total_df >= int(os.environ.get("SPARK_GRAFT_WAND_SEED_MIN", "1000000"))
+        total_df >= wand_ops._SEED_MIN_POSTINGS
     )
 
     report = {

@@ -68,13 +68,14 @@ def test_term_filter_pushed_to_parquet_scan(spark, documents, tmp_path):
 
 
 def test_scorer_broadcasts_small_sides(doc_index):
-    from miru_spark.filters import parse_query
-    from miru_spark.operators.fulltext import score_candidates
+    # the tree path's scoring join: the query-term relation broadcasts
+    from miru_spark.operators import fulltext
 
-    scored = score_candidates(doc_index, parse_query("spark AND join", k=10))
+    scored = fulltext.top_k(doc_index, "spark AND (join OR merge)", k=10)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan, plan  # the query-term relation broadcasts
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
 
 
 def test_gather_broadcasts_winners_side(doc_index):
@@ -143,14 +144,19 @@ def test_sort_strategy_byte_identical_to_hash_agg(spark, documents):
 
 
 def test_score_path_is_self_contained(doc_index):
-    """Postings carry tf+dl+doc_key per row (FORMAT_VERSION 4): the scoring
-    plan's ONLY join is the broadcast query-term relation — any shuffle
-    join here would be the O(corpus) doclens relation creeping back in."""
-    from miru_spark.filters import parse_query
-    from miru_spark.operators.fulltext import score_candidates
+    """Postings carry tf+dl+doc_key per row (FORMAT_VERSION 4): a flat
+    top-k scores them in the per-partition kernel with no shuffle join, and
+    the tree path's ONLY join is the broadcast query-term relation — any
+    shuffle join here would be the O(corpus) doclens relation creeping back
+    in."""
+    from miru_spark.operators import fulltext
 
-    scored = score_candidates(doc_index, parse_query("spark AND join", k=10))
-    plan = scored._jdf.queryExecution().executedPlan().toString()
+    flat = fulltext.top_k(doc_index, "spark AND join", k=10)
+    plan = flat._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+    tree = fulltext.top_k(doc_index, "spark AND (join OR merge)", k=10)
+    plan = tree._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") == 1, plan

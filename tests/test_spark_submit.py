@@ -53,7 +53,7 @@ def test_spark_submit_build_query_remove(tmp_path, spark, documents):
         ["query", "--index", idx_dir, "--q", "spark AND join", "--k", "5"]
     )
     assert len(res["results"]) == 5
-    # the CLI (WAND engine) must match the in-process DataFrame path
+    # the CLI must match the in-process top_k
     want = fulltext.top_k(load_index(spark, idx_dir), "spark AND join", k=5).collect()
     assert [(r["doc"], r["score"]) for r in want] == [
         (r["doc"], r["score"]) for r in res["results"]
@@ -61,7 +61,7 @@ def test_spark_submit_build_query_remove(tmp_path, spark, documents):
     # numeric range through the CLI
     rng = _submit(
         ["query", "--index", idx_dir, "--q", "spark AND n_chars:[200 TO 400]",
-         "--k", "5", "--engine", "dataframe"]
+         "--k", "5"]
     )
     assert len(rng["results"]) > 0
 

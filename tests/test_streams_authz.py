@@ -60,9 +60,9 @@ def test_query_with_authz_expression(authz_index):
 
 
 def test_wand_engine_honors_authz(authz_index):
-    """The kernel path must never skip spec.authz (CLI --engine wand): it
-    delegates authz'd specs to the DataFrame mask chain, so results match
-    fulltext.top_k exactly — and NOT_PROVIDED ([]) sees nothing."""
+    """The kernel path must never skip spec.authz (the CLI's query engine):
+    it delegates authz'd specs to the tree paths' mask chain, so results
+    match fulltext.top_k exactly — and NOT_PROVIDED ([]) sees nothing."""
     from miru_spark.operators import wand as wand_ops
 
     spec = parse_query("spark", k=10)
